@@ -3,7 +3,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Plan inspection for perf iteration: print the formatted physical
   * plan of any `SparkEntry.queries` entry without running it — the
-  * companion to BenchOne (time it) and PlanAuditSpec (pin it).
+  * companion to Bench (time it) and PlanAuditSpec (pin it).
   *
   * usage: graft.ExplainOne <query> [query ...]
   * env:   SPARK_GRAFT_SF_DIR

@@ -14,18 +14,9 @@ object Verify {
     // passes exactly two args and gets the full dump).
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // SharedState creates the warehouse dir eagerly; anchor it under
-      // target/ (git-ignored) instead of scattering `spark-warehouse`
-      // into whatever cwd the verifier runs from.
-      .config(
-        "spark.sql.warehouse.dir",
-        new java.io.File("target/spark-warehouse").getAbsolutePath
-      )
+    // the session Bench runs: the oracle checks the benchmarked plans
+    val spark = GraftSession
+      .configure(SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

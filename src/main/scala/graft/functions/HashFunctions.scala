@@ -3,8 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Hashing primitives for sketch-based dedup: MinHash signatures,
-  * LSH band keys, and SimHash bit-vote components.
+/** Hashing primitives for sketch-based dedup: MinHash signatures
+  * and LSH band keys.
   *
   * All hashes are deterministic expressions (xxhash64 + affine
   * transforms over a prime field), so signatures are reproducible
@@ -51,8 +51,4 @@ object hashing {
         )
       }: _*
     )
-
-  /** SimHash: per-token 64-bit hash; callers bit-vote per position.
-    * Exposed for the explode+groupBy implementation in Dedup. */
-  def simhashTokenBits(t: Column): Column = xxhash64(t)
 }

@@ -847,53 +847,10 @@ object Dedup {
       .orderBy("source_a", "source_b")
   }
 
-  /** Connected components over an undirected pair list (doc_a, doc_b):
-    * returns (u, lbl) where lbl is the smallest node id reachable from
-    * u. Iterative min-label propagation; labels only decrease, so the
-    * fixpoint test is a stable sum(lbl) — one scalar action per hop.
-    * Converges in component-diameter iterations, bounded by maxIters. */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    val edges = pairs
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .unionAll(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-    var labels = edges
-      .select(col("u"))
-      .distinct()
-      .select(col("u"), col("u").as("lbl"))
-      .localCheckpoint(false)
-    // sum over ZERO rows is SQL null: an empty pair list must read as
-    // checksum 0, not NPE (the star variant's checksum already does).
-    def checksum(df: DataFrame): Long = {
-      val r = df.agg(sum("lbl")).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-    var prevSum = checksum(labels)
-    var converged = labels.isEmpty
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val neighborMin = edges
-        .join(labels.select(col("u").as("v"), col("lbl").as("vlbl")), "v")
-        .groupBy("u")
-        .agg(min("vlbl").as("nlbl"))
-      labels = labels
-        .join(neighborMin, Seq("u"), "left")
-        .select(
-          col("u"),
-          least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl")
-        )
-        .localCheckpoint(false)
-      val s = checksum(labels)
-      converged = s == prevSum
-      prevSum = s
-      iter += 1
-    }
-    labels
-  }
-
   /** Connected components via alternating large-star / small-star
     * rounds (Kiveris et al., "Connected Components in MapReduce and
     * Beyond", 2014) — O(log n) rounds on ANY graph topology, vs the
-    * component-DIAMETER rounds of `connectedComponents` above. On a
+    * component-DIAMETER rounds of min-label propagation. On a
     * 100 TB near-dup graph a boilerplate-chained component can have
     * diameter in the thousands; this variant's round count is
     * independent of that. Each round is two symmetric-join + min
@@ -2018,24 +1975,13 @@ object Dedup {
       lake: Lake,
       k: Int = 8,
       minDocs: Int = 2,
-      // true checkpoints the repartitioned gram stream (lineage cut,
-      // partitioning property LOST — downstream aggs re-shuffle); the
-      // default persists it instead: persist keeps hashpartitioning
-      // (gh), so the df aggregation runs shuffle-free off the cache
-      // and the semi-join probe re-reads the same blocks. Relying on
-      // ReuseExchange (the round-12 form) broke once the pre-filter
-      // landed: the optimizer pushes the dup semi-join below the
-      // probe side's repartition, the two exchange subtrees stop
-      // canonicalizing equal, and the kernel + corpus shuffle ran
-      // TWICE (plan-verified at sf1, ExplainOne).
-      materialize: Boolean = false,
       // Rare-window pre-filter (the round-13 fix for the sf30
       // shuffle-spill boundary). On this corpus 86-88% of window
       // occurrences are globally unique (measured sf1/sf10/sf30: kept
       // fraction 0.122/0.122/0.134), so shuffling one
       // (doc_id, pos, gh) row per corpus token mostly ships rows the
       // df >= minDocs gate will discard. Modes:
-      //  - "set" (default): pass 1 shuffles ONLY the 8-byte hash
+      //  - "set": pass 1 shuffles ONLY the 8-byte hash
       //    (projection-pruned scan, repartition-before-aggregate — a
       //    ~12x narrower stream than the naive row) into an exact
       //    occurrence count; hashes with >= minDocs occurrences — a
@@ -2045,13 +1991,6 @@ object Dedup {
       //    `maxBroadcastKeys`, else via a Bloom probe built FROM the
       //    candidate set (memory-clamped; false positives only admit
       //    extra rows into the exact aggregate). Exact either way.
-      //  - "sketch": one extra map-only scan folds the raw hash
-      //    stream into a mergeable seen-twice sketch
-      //    (graft.functions.TwiceSketch) — no pass-1 shuffle at all,
-      //    executor memory clamped, false positives only add rows.
-      //    Measured slower than "set" here (the treeReduce moves
-      //    ~4 GB of partial bitmaps at sf30) but the shape to reach
-      //    for when even an 8-byte-row shuffle is unaffordable.
       //  - "off": the round-12 single-shuffle form.
       //  - "auto" (default): "off" below `preFilterMinChars` of corpus
       //    text, "set" above — the measured crossover on the bench
@@ -2069,21 +2008,8 @@ object Dedup {
       // "set" mode: switch from broadcast semi-join to the Bloom
       // probe above this candidate-set size (16M longs ~= 128 MB raw)
       maxBroadcastKeys: Long = 16L << 20,
-      // "sketch" mode sizing; also caps the "set" mode Bloom fallback.
-      // Executor sizing note (round 14): during the build EVERY
-      // concurrent task holds one partial (2 x sketchMaxBytes worst
-      // case) — size executors for tasksPerExecutor x 2 x
-      // sketchMaxBytes (local[32] at sf30 needed a 16g heap for 32
-      // concurrent 128 MB partials). The DRIVER needs no special
-      // sizing at the DEFAULT clamp… up to a point: the one fetched
-      // sketch serializes to <= 2 x sketchMaxBytes, so at the 512 MB
-      // default the fetch can reach 1 GiB — exactly the default
-      // spark.driver.maxResultSize — precisely when the byte clamp
-      // engages. Callers raising sketchMaxBytes past ~256 MB must
-      // raise spark.driver.maxResultSize to >= 2 x sketchMaxBytes +
-      // slack (GraftSession keeps Spark's 1g default; the old global
-      // 4g override was removed round 14).
-      sketchBitsPerKey: Int = 4,
+      // caps the "set" mode Bloom fallback's bitmap (bytes); the
+      // filter ships to every executor as one broadcast
       sketchMaxBytes: Long = 512L << 20
   ): DataFrame = {
     val spark = lake.spark
@@ -2118,53 +2044,7 @@ object Dedup {
       } else preFilter
     val gramsKept =
       if (mode == "off") gramsRaw
-      else if (mode == "sketch") {
-        // Size the sketch from a cheap non-hashing scan: windows ~=
-        // tokens, ~6 chars per token+space, so chars/5 overestimates
-        // the distinct-key count a little; power-of-two rounding and
-        // the byte clamp absorb the slack either way.
-        val expected = math.max(64L, totalChars / 5)
-        val bits = sketchBitsPerKey
-        val cap = sketchMaxBytes
-        // Build over InternalRow (queryExecution.toRdd): the typed
-        // Dataset route boxes every 8-byte hash on its way into the
-        // fold — 76M boxed Longs at sf30 for a pass whose body is
-        // three bit-sets.
-        val partials = gramsRaw
-          .select("gh")
-          .queryExecution
-          .toRdd
-          .mapPartitions { it =>
-            val s = graft.functions.TwiceSketch
-              .create(expected, bits, maxBytesPerArray = cap)
-            it.foreach(r => s.add(r.getLong(0)))
-            Iterator.single(s)
-          }
-        // Merge EXECUTOR-SIDE down to one partition, then collect the
-        // single fully-merged sketch (round-13 review: treeReduce's
-        // final step fetched ~sqrt(P) partial bitmaps to the driver at
-        // once, which needed a global spark.driver.maxResultSize bump
-        // to 4g for a non-default mode — a guardrail that exists to
-        // catch accidental driver-side collects). Two shuffled-
-        // coalesce levels move the same partial bytes the treeReduce
-        // levels did, but the driver now receives exactly ONE sketch
-        // (<= 2 x sketchMaxBytes), under the default 1g for every
-        // realistic sizing (sf30: 2 x 64 MB).
-        def mergeLevel(
-            r: org.apache.spark.rdd.RDD[graft.functions.TwiceSketch],
-            n: Int) =
-          r.coalesce(n, shuffle = true)
-            .mapPartitions(it =>
-              if (it.hasNext) Iterator.single(it.reduce(_.merge(_)))
-              else Iterator.empty)
-        val p = partials.getNumPartitions
-        val level1 =
-          if (p > 8) mergeLevel(partials, math.ceil(math.sqrt(p)).toInt)
-          else partials
-        val sketch = mergeLevel(level1, 1).collect()(0)
-        val bcast = spark.sparkContext.broadcast(sketch)
-        gramsRaw.filter(graft.plans.SketchMightTwice(col("gh"), bcast))
-      } else {
+      else {
         require(mode == "set", s"unknown preFilter mode: $preFilter")
         // Exact candidate set: hashes occurring >= minDocs times — a
         // superset of the df >= minDocs winners (df counts DISTINCT
@@ -2204,6 +2084,15 @@ object Dedup {
       // runs this shuffle ONCE and both read its files; neither
       // re-runs scan+hash or pays its own corpus-stream exchange
       .repartition(col("gh"))
+    // Persist, not checkpoint: persist keeps hashpartitioning(gh), so
+    // the df aggregation runs shuffle-free off the cache and the
+    // semi-join probe re-reads the same blocks (a checkpoint loses the
+    // partitioning and the downstream aggregations re-shuffle).
+    // Relying on ReuseExchange alone (the round-12 form) broke once
+    // the pre-filter landed: the optimizer pushes the dup semi-join
+    // below the probe side's repartition, the two exchange subtrees
+    // stop canonicalizing equal, and the kernel + corpus shuffle ran
+    // TWICE (plan-verified at sf1, ExplainOne).
     // Persist lifecycle (round-13 review): the cached blocks live as
     // long as the returned DataFrame's plan references them — Spark's
     // normal Dataset.persist contract; the ContextCleaner frees them
@@ -2213,8 +2102,7 @@ object Dedup {
     // before every timed run, so suite sweeps neither reuse nor pin
     // this stream).
     val gramsM =
-      if (materialize) grams.localCheckpoint(false)
-      else grams.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      grams.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dup = gramsM
       .groupBy("gh")
       .agg(countDistinct("doc_id").as("df"))

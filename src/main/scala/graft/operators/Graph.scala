@@ -1352,50 +1352,13 @@ object Graph {
   /** graph06: rank customers and suppliers by PageRank on the
     * bidirected trading graph (distinct customer-supplier pairs from
     * lineitem x orders — the citation-graph centrality analog on the
-    * lake's own fact data). 5 iterations, top 20. */
-  def graph06Pagerank(lake: Lake, iters: Int = 5, topK: Int = 20): DataFrame = {
-    // The loop runs on LONG node ids (customer -> 2k, supplier -> 2k+1),
-    // not the display strings: 5 iterations of join+groupBy each hash,
-    // shuffle and compare the node key, and an 8-byte long beats a
-    // variable-length "c12345" string in every one of those. The
-    // 'c'/'s' labels are re-derived once, on the topK output.
-    val pairs = lake.lineitem
-      .select(col("l_orderkey"), col("l_suppkey"))
-      .join(lake.orders.select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(
-        expr("o_custkey * 2L").as("a"),
-        expr("l_suppkey * 2L + 1L").as("b")
-      )
-      // repartition-before-distinct (round 14, same memory bound as
-      // the rank loop): the distinct's partial aggregate would
-      // otherwise share the fact-join stage's memory with ~unique
-      // (a, b) keys across 32 concurrent tasks
-      .repartition(col("a"), col("b"))
-      .distinct()
-      // Materialize before bidirecting: the union below references
-      // `pairs` twice, and without the checkpoint the fact join +
-      // distinct execute once per branch.
-      .localCheckpoint()
-    val edges = pairs
-      .select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
-    pagerankMicro(edges, iters)
-      .select(
-        expr(
-          "IF(node % 2 = 0, concat('c', node div 2), concat('s', (node - 1) div 2))"
-        ).as("node"),
-        col("r")
-      )
-      .orderBy(col("r").desc, col("node"))
-      .limit(topK)
-      .select(col("node"), col("r").as("rank_micro"))
-  }
-
-  /** graph06 on the primitive kernel loop — the SAME function (see
-    * pagerankKernelMicro: integer mass ⇒ bit-for-bit equal results,
-    * spec-pinned), with the SQL distinct, the outdeg window and the
-    * per-iteration join/aggregate stages all gone. The raw bidirected
+    * lake's own fact data). 5 iterations, top 20.
+    *
+    * Runs on the primitive kernel loop — the SAME function as the
+    * DataFrame loop over [[pagerankMicro]] (see pagerankKernelMicro:
+    * integer mass ⇒ bit-for-bit equal results, pinned against that
+    * loop in GraphSpec), with the SQL distinct, the outdeg window and
+    * the per-iteration join/aggregate stages all gone. The raw bidirected
     * stream feeds the index UN-deduped: duplicates of a pair land in
     * the same src partition and die in the build's adjacent dedupe,
     * and bidirect-then-distinct ≡ distinct-then-bidirect (the two

@@ -100,7 +100,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (20L, 21L), (21L, 22L), (20L, 22L),
       (30L, 31L)
     ).toDF("doc_a", "doc_b")
-    val labels = Dedup
+    val labels = Reference
       .connectedComponents(pairs)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -124,7 +124,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(
       asMap(Dedup.connectedComponentsStar(planted)) ==
-        asMap(Dedup.connectedComponents(planted))
+        asMap(Reference.connectedComponents(planted))
     )
     val real = Dedup
       .dedup04MinhashLsh(lake)
@@ -132,7 +132,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .localCheckpoint()
     assert(
       asMap(Dedup.connectedComponentsStar(real)) ==
-        asMap(Dedup.connectedComponents(real))
+        asMap(Reference.connectedComponents(real))
     )
   }
 

@@ -173,7 +173,7 @@ class GraphSpec extends AnyFunSuite {
     // customer-supplier pairs also exercise buildDistinct's in-array
     // dedupe against the SQL repartition().distinct().
     val lake = graft.catalog.Lake(TestSpark.spark, TestSpark.sfDir)
-    val df = Graph.graph06Pagerank(lake, iters = 5, topK = Int.MaxValue)
+    val df = Reference.graph06Pagerank(lake, iters = 5, topK = Int.MaxValue)
       .collect().map(_.toString).toSeq
     val k = Graph.graph06PagerankKernel(lake, iters = 5, topK = Int.MaxValue)
       .collect().map(_.toString).toSeq

@@ -323,7 +323,7 @@ class PlanAuditSpec extends AnyFunSuite {
   test("graph06: the rank loop body is equi-join plus aggregate only") {
     // the retained DataFrame form (the kernel's reference semantics
     // and the shape a pure-SQL consumer would run)
-    val p = plan(Graph.graph06Pagerank(lake, iters = 2))
+    val p = plan(Reference.graph06Pagerank(lake, iters = 2))
     // scalar n_nodes rides a broadcast single-row cross join (the
     // legitimate scalar idiom); anything else cartesian is a bug
     assert(!p.contains("CartesianProduct"), p)
@@ -543,11 +543,9 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("dedup13: hash-keyed index, per-doc array fold, no window, no cartesian") {
-    // materialize=false: audit the full lineage, not the checkpoint's
-    // Scan ExistingRDD stump
-    val p = plan(
-      graft.operators.Dedup.dedup13ExactSubstring(lake, materialize = false)
-    )
+    // the gram stream is persisted, not checkpointed, so the plan
+    // still shows the full lineage under its InMemoryRelation
+    val p = plan(graft.operators.Dedup.dedup13ExactSubstring(lake))
     // the frequency index and semi-join key on the 8-byte window hash,
     // never on a gram string column
     assert(p.contains("shingle_hash_seq"), p)

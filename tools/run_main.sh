@@ -1,9 +1,9 @@
 #!/usr/bin/env bash
 # Launch a graft main class directly (no sbt lock): same JDK17
 # add-opens set as build.sbt's javaOptions. Usage:
-#   tools/run_main.sh graft.BenchOne dedup04_minhash_lsh
+#   SPARK_GRAFT_QUERIES=dedup04_minhash_lsh tools/run_main.sh graft.Bench
 # env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_SWEEPS,
-#      SPARK_DRIVER_MEM (default 8g)
+#      SPARK_GRAFT_QUERIES, SPARK_DRIVER_MEM (default 8g)
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 OPENS=""
